@@ -19,6 +19,11 @@ import org.apache.spark.sql.SparkSession
   * tail still carries the totals.
   */
 object Bench {
+  /** The `BENCH_rNN.json` artifact of the highest round, by round NUMBER
+    * (by name, `BENCH_r9` would outrank `BENCH_r22`). */
+  private[graft] def newestRound(artifacts: Seq[java.io.File]): Option[java.io.File] =
+    artifacts.maxByOption(f => "\\d+".r.findFirstIn(f.getName).get.toInt)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -335,22 +340,20 @@ object Bench {
       //   3. the newest BENCH_r*.json (legacy fallback, truncated).
       val refPath = sys.env.get("SPARK_GRAFT_BENCH_REF").orElse {
         val snap = new java.io.File("bench_ref.json")
-        val drivers = Option(new java.io.File(".").listFiles()).toSeq.flatten
+        val artifacts = Option(new java.io.File(".").listFiles()).toSeq.flatten
           .filter(_.getName.matches("BENCH_r\\d+\\.json"))
         if (snap.isFile) {
           // staleness guard (r21 ADVICE): the committed snapshot outranks
           // the driver artifacts, so a snapshot NOT refreshed at the last
           // round close would silently adjudicate against stale bands —
           // say so when a newer BENCH_r*.json exists in cwd.
-          drivers.filter(_.lastModified() > snap.lastModified())
-            .sortBy(_.getName).lastOption.foreach(d => System.err.println(
+          newestRound(artifacts.filter(_.lastModified() > snap.lastModified()))
+            .foreach(d => System.err.println(
               s"[bench] WARNING: ${d.getName} is newer than bench_ref.json " +
                 "— the snapshot may be stale; refresh it from " +
                 "target/bench_last.json at round close"))
           Some(snap.getPath)
-        } else if (drivers.isEmpty) None
-        else Some(drivers.maxBy(f =>
-          "\\d+".r.findFirstIn(f.getName).get.toInt).getPath)
+        } else newestRound(artifacts).map(_.getPath)
       }
       refPath.flatMap { p =>
         try {

@@ -1372,7 +1372,7 @@ object SparkEntry {
       java.nio.file.Files.deleteIfExists(link)
       java.nio.file.Files.createSymbolicLink(
         link, java.nio.file.Paths.get(path).toAbsolutePath)
-      val sch = s.read.parquet(path).schema
+      val sch = schemaOf(s, path)
       val qname = s"q90_mem_$tok"
       s.catalog.dropTempView(qname)
       // a 3-group aggregate doesn't need 32 state-store partitions — the
@@ -1902,7 +1902,7 @@ object SparkEntry {
       java.nio.file.Files.deleteIfExists(link)
       java.nio.file.Files.createSymbolicLink(
         link, java.nio.file.Paths.get(path).toAbsolutePath)
-      val sch = s.read.parquet(path).schema
+      val sch = schemaOf(s, path)
       val qname = s"q96_mem_$tok"
       s.catalog.dropTempView(qname)
       val stream = s.readStream.schema(sch).parquet(srcDir.toString)

@@ -52,7 +52,8 @@ object Dedup {
     * job) — runs as ONE task while the other cores idle (measured: q121's
     * per-job timeline showed a 3.3 s single-task broadcast build as the
     * query's long pole). A real corpus has plenty of scan partitions and
-    * skips this shuffle entirely, so the at-scale plan is unchanged. */
+    * skips this shuffle entirely, so the at-scale plan is unchanged. A
+    * streaming input is returned as is. */
   private[graft] def fanOutScan(df: DataFrame,
       key: org.apache.spark.sql.Column): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
@@ -63,7 +64,32 @@ object Dedup {
     // §2.5), and on a 1-partition scan that sort of the full text
     // payloads is itself a serial pass. Hash placement is deterministic
     // by value, so it needs no sort and is retry-safe by construction.
-    if (df.rdd.getNumPartitions < par) df.repartition(par, key) else df
+    if (df.isStreaming || plannedPartitions(df) >= par) df
+    else df.repartition(par, key)
+  }
+
+  /** The partition count `df` will execute with, read off its physical
+    * plan without running or code-generating anything (a `.rdd` probe
+    * builds a second execution and, under AQE, runs the plan's shuffle
+    * stages). File scans count their splits; nodes with a known output
+    * partitioning report it, which for a shuffle is its pre-coalescing
+    * count; a union adds its children's counts, and any other node
+    * passes on its widest child's (a broadcast side counts one). */
+  private[graft] def plannedPartitions(df: DataFrame): Int = {
+    import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def parts(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => parts(a.executedPlan)
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      case u: UnionExec => u.children.map(parts).sum
+      case _ => p.outputPartitioning match {
+        case UnknownPartitioning(_) if p.children.nonEmpty => p.children.map(parts).max
+        case UnknownPartitioning(_) => p.execute().getNumPartitions
+        case known => known.numPartitions
+      }
+    }
+    parts(df.queryExecution.executedPlan)
   }
 
   /** Exact dedup: group on the MD5 of normalized text, keep the smallest id.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors}
 
 /** Run INDEPENDENT Spark jobs concurrently from a small driver pool
   * (guide §2.6): actions are only sequential because driver code calls
@@ -18,10 +18,10 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
   *    `ExecutionException` wrapper is unwrapped), so callers see the
   *    same exception type the sequential form threw (e.g. writePhase's
   *    `require`);
-  *  - on the first failure the sibling futures are cancelled
-  *    (best-effort interrupt) and the pool is shut down with
-  *    `shutdownNow`, instead of letting siblings run to completion
-  *    behind a rethrow.
+  *  - the first job to FAIL, in completion order, fails the call: the
+  *    sibling futures are cancelled (best-effort interrupt) and the pool
+  *    is shut down with `shutdownNow`, instead of letting siblings run
+  *    to completion behind a rethrow.
   *
   * Spark job-group/description propagation: worker threads are created
   * lazily AT SUBMIT TIME by the calling thread, so the caller's Spark
@@ -36,24 +36,21 @@ object Overlap {
     val pool = Executors.newFixedThreadPool(
       math.min(jobs.size, maxConcurrent))
     try {
+      // take futures in COMPLETION order, so a fast failure is seen at
+      // once rather than behind an earlier slow sibling
+      val done = new ExecutorCompletionService[A](pool)
       val futures = jobs.map(j =>
-        pool.submit(new Callable[A] { def call(): A = j() }))
-      val out = Seq.newBuilder[A]
-      var failed: Throwable = null
-      futures.foreach { f =>
-        if (failed == null)
-          try out += f.get()
-          catch {
-            case e: ExecutionException =>
-              failed = Option(e.getCause).getOrElse(e)
-              futures.foreach(_.cancel(true))
-            case e: Throwable =>
-              failed = e
-              futures.foreach(_.cancel(true))
-          }
+        done.submit(new Callable[A] { def call(): A = j() }))
+      try futures.foreach(_ => done.take().get())
+      catch {
+        case e: Throwable =>
+          futures.foreach(_.cancel(true))
+          throw (e match {
+            case ee: ExecutionException => Option(ee.getCause).getOrElse(ee)
+            case _ => e
+          })
       }
-      if (failed != null) throw failed
-      out.result()
+      futures.map(_.get())
     } finally pool.shutdownNow()
   }
 }

@@ -173,7 +173,7 @@ object StreamingOps {
         link.toFile.deleteOnExit()
         dir.toString
       } else path
-    val batchSchema = spark.read.parquet(path).schema
+    val batchSchema = graft.Tables.schemaOf(spark, path)
     val raw = spark.readStream.schema(batchSchema).parquet(streamPath)
     // Same three-encoding normalization as the batch path — `withWatermark`
     // is the strictest consumer (rejects NTZ outright), so the stream must
